@@ -95,15 +95,6 @@ def parse_feed_date(c: Column | str) -> Column:
     return F.to_date(c, "yyyy-MM-dd")
 
 
-def iso_ts(c: Column | str) -> Column:
-    """ISO-8601 serialization of a timestamp (loader write format).
-
-    Reference: etl/loaders/mongodb_loader.py:357-370.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-
-
 def dims_from_string(c: Column | str) -> Column:
     """Parse a combined dimension string like "10,5X8X2 CM" into a
     struct<length double, width double, height double, unit string>.

@@ -24,7 +24,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pim_etl_spark.pipeline import registry
@@ -48,6 +48,15 @@ def load_supplier_feeds(spark: SparkSession, feeds_dir: str, supplier_id: str) -
     return feeds
 
 
+def _etl_counters() -> tuple:
+    """The ETLResult counters (etl/base.py:22-44) as aggregates over the
+    unified batch: rows processed and rows missing their key."""
+    return (
+        F.count(F.lit(1)).alias("processed"),
+        F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
+    )
+
+
 def run_sync(
     spark: SparkSession,
     feeds_dir: str,
@@ -59,6 +68,13 @@ def run_sync(
 ) -> dict:
     """Full or incremental sync → upsert into gold (ReplaceOne
     semantics via window dedup), ETLResult-style summary out.
+
+    With ``versioned``, the ETLResult counters (rows processed, rows
+    missing ``product_id``) are observed inside the ``merge_files``
+    write job (``DataFrame.observe``), not computed by a second run of
+    the transform; the driver-built tables on that path (technique
+    decode, manifest stats, lookup probes) are Arrow-local
+    ``LocalTableScan``s, so a sync starts no Python worker.
 
     With ``quarantine``, rows of each supplier's primary feed missing
     required fields are split out (SURVEY N5 error isolation,
@@ -111,14 +127,14 @@ def run_sync(
                 f"incremental sync (--since {since}) requires an existing versioned "
                 f"gold table at {gold_path}; run a full sync first"
             )
-        counters = unified.agg(
-            F.count(F.lit(1)).alias("processed"),
-            F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
-        ).first()
-        n_errors = int(counters["null_keys"] or 0)
+        # the counters ride the merge's data-file write, which every
+        # merge_files path runs, instead of re-running the transform
+        obs = Observation("etl_metrics")
         vstats = V.merge_files(
-            spark, gold_path, unified, keys=["product_id"], order_col="last_sync"
+            spark, gold_path, unified, keys=["product_id"], order_col="last_sync",
+            observe=(obs, *_etl_counters()),
         )
+        n_errors = int(obs.get["null_keys"] or 0)
         gold_df = V.read_version(spark, gold_path)
         per_supplier = {
             r["supplier_id"]: r["n"]
@@ -145,12 +161,11 @@ def run_sync(
         # a full-gold rewrite. The ETLResult counters aggregate the
         # DELTA directly (feed-sized — the cheap side at 100 TB; the
         # old full-rewrite path measured them for free inside its
-        # whole-table write, which no longer exists).
-        counters = unified.agg(
-            F.count(F.lit(1)).alias("processed"),
-            F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
-        ).first()
-        n_errors = int(counters["null_keys"] or 0)
+        # whole-table write, which no longer exists). Not observed: an
+        # observed node blocks the per-partition filter from pruning
+        # the other suppliers' union branches, so every partition write
+        # would re-run all suppliers' transforms.
+        n_errors = int(unified.agg(*_etl_counters()).first()["null_keys"] or 0)
         merge_stats = merge_partitioned(
             spark,
             gold_path,
@@ -167,15 +182,10 @@ def run_sync(
     else:
         # first-ever sync: full write; counters measured inside the
         # write job via Observation — no second scan of the transform
-        from pyspark.sql import Observation
-
         obs = Observation("etl_metrics")
-        observed = unified.observe(
-            obs,
-            F.count(F.lit(1)).alias("processed"),
-            F.sum(F.when(F.col("product_id").isNull(), 1).otherwise(0)).alias("null_keys"),
+        atomic_overwrite(
+            unified.observe(obs, *_etl_counters()), gold_path, partition_by=("supplier_id",)
         )
-        atomic_overwrite(observed, gold_path, partition_by=("supplier_id",))
         n_errors = int(obs.get["null_keys"] or 0)
         merge_stats = None
     per_supplier = {
@@ -209,15 +219,15 @@ def run_status(spark: SparkSession, gold_path: str) -> dict:
     else:
         gold = spark.read.parquet(gold_path)
         extra = {}
-    by_supplier = {
-        r["supplier_id"]: r["n"]
-        for r in gold.groupBy("supplier_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    by_status = {
-        r["status"]: r["n"] for r in gold.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    # one job: the (supplier, status) cube is tiny, so both roll-ups and
+    # the total are summed driver-side instead of three scans of gold
+    by_supplier: dict = {}
+    by_status: dict = {}
+    for r in gold.groupBy("supplier_id", "status").agg(F.count(F.lit(1)).alias("n")).collect():
+        by_supplier[r["supplier_id"]] = by_supplier.get(r["supplier_id"], 0) + r["n"]
+        by_status[r["status"]] = by_status.get(r["status"], 0) + r["n"]
     return {
-        "total_products": gold.count(),
+        "total_products": sum(by_supplier.values()),
         "by_supplier": by_supplier,
         "by_status": by_status,
         **extra,

@@ -379,12 +379,3 @@ def feed_frames(spark: SparkSession, n_masters: int = 40) -> dict[str, DataFrame
         _LANDED_DIRS[key] = d
     d = _LANDED_DIRS[key]
     return {name: spark.read.parquet(f"{d}/{name}.parquet") for name in FEED_SCHEMAS}
-
-
-def write_feeds(spark: SparkSession, out_dir: str, n_masters: int = 40) -> dict[str, str]:
-    paths = {}
-    for name, df in feed_frames(spark, n_masters).items():
-        path = f"{out_dir}/{name}.parquet"
-        df.write.mode("overwrite").parquet(path)
-        paths[name] = path
-    return paths

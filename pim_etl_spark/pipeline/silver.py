@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pim_etl_spark import functions as pf
+from pim_etl_spark.session import local_df
 
 SUPPLIER_ID = "midocean"
 SUPPLIER_NAME = "MidOcean"
@@ -60,7 +61,7 @@ TECHNIQUE_DECODE = [
 
 
 def technique_decode_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TECHNIQUE_DECODE, "technique_id string, technique string")
+    return local_df(spark, TECHNIQUE_DECODE, "technique_id string, technique string")
 
 
 def parse_pricelist(pricelist_raw: DataFrame) -> DataFrame:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pim_etl_spark.pipeline.gold import apply_upsert, upsert_latest
+from pim_etl_spark.session import local_df
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
@@ -680,7 +681,7 @@ def point_lookup_plan(
         dt = dict(
             spark.read.parquet(_entry_path(path, files[0])).dtypes
         ).get(col, "bigint")
-        probe = spark.createDataFrame([(x,) for x in val_list], f"{col} {dt}")
+        probe = local_df(spark, [(x,) for x in val_list], f"{col} {dt}")
         for m_bits, k in param_sets:
             pos_by_param[(m_bits, k)] = {
                 r["__v"]: list(r["__ps"])
@@ -808,6 +809,7 @@ def merge_files(
     order_col: str,
     txn: tuple[str, int] | None = None,
     extra: dict | None = None,
+    observe: tuple = (),
 ) -> dict:
     """File-granular copy-on-write MERGE (Delta's MERGE INTO shape):
 
@@ -825,11 +827,19 @@ def merge_files(
     data skipping — the candidate scan never opens those files at
     all), then resolves exact touched files among the candidates.
     Returns observability stats including the new version number.
+
+    ``observe`` = ``(Observation, *metric columns)`` is attached to the
+    batch rows of the data-file write only, so the caller's counters
+    ride the one job every path runs (empty batches included). The
+    key-discovery jobs read the unobserved batch: an observed node
+    blocks column pruning, and a checkpoint action over it could
+    complete the Observation before its rows have flowed.
     """
     stats_cols = (keys[0],)
+    written = incoming.observe(*observe) if observe else incoming
     parent = current_version(path)
     if parent == 0:
-        merged = upsert_latest(incoming, keys=keys, order_col=order_col)
+        merged = upsert_latest(written, keys=keys, order_col=order_col)
         files, fstats = _write_data_files(merged, path, 1, stats_cols=stats_cols)
         version = _commit(
             path, files, "merge", {"files_rewritten": 0, "files_kept": 0},
@@ -841,7 +851,7 @@ def merge_files(
     _require_no_pending_deletes(path, pointer, "merge_files")
     if "shards" in pointer:
         return _merge_files_sharded(
-            spark, path, incoming, keys, order_col, pointer, parent,
+            spark, path, incoming, written, keys, order_col, pointer, parent,
             txn=txn, extra=extra,
         )
 
@@ -877,7 +887,7 @@ def merge_files(
         unstatted = list(parent_files)
     if stats_rows:
         key_type = dict(incoming.dtypes)[prune_col]
-        stats_df = spark.createDataFrame(stats_rows, ["__f", "__lo", "__hi"]).select(
+        stats_df = local_df(spark, stats_rows, ["__f", "__lo", "__hi"]).select(
             "__f",
             F.col("__lo").cast(key_type).alias("__lo"),
             F.col("__hi").cast(key_type).alias("__hi"),
@@ -928,10 +938,10 @@ def merge_files(
         )
         # schema evolution: a batch may add columns (old rows get NULL)
         # or omit columns (batch rows get NULL) — align both sides
-        existing_touched, incoming_aligned = _align_schemas(existing_touched, incoming)
+        existing_touched, incoming_aligned = _align_schemas(existing_touched, written)
         merged = apply_upsert(existing_touched, incoming_aligned, keys=keys, order_col=order_col)
     else:
-        merged = upsert_latest(incoming, keys=keys, order_col=order_col)
+        merged = upsert_latest(written, keys=keys, order_col=order_col)
     new_files, new_fstats = _write_data_files(merged, path, parent + 1, stats_cols=stats_cols)
     version = _commit(
         path,
@@ -963,6 +973,7 @@ def _merge_files_sharded(
     spark: SparkSession,
     path: str,
     incoming: DataFrame,
+    written: DataFrame,
     keys: Sequence[str],
     order_col: str,
     pointer: dict,
@@ -986,6 +997,9 @@ def _merge_files_sharded(
 
     Driver cost per sync: O(shard count + loaded-shard entries +
     touched files) — independent of total table file count.
+    ``written`` is the batch as the data-file write reads it (with
+    ``merge_files``' ``observe`` attached); key discovery reads
+    ``incoming``.
     """
     prune_col = keys[0]
     # one materialized distinct-key frame for the shard prune, the file
@@ -1003,7 +1017,7 @@ def _merge_files_sharded(
     unranged = [s for s in all_shards if s not in {r[0] for r in ranged}]
     if ranged:
         key_type = dict(incoming.dtypes)[prune_col]
-        ranges_df = spark.createDataFrame(ranged, ["__s", "__lo", "__hi"]).select(
+        ranges_df = local_df(spark, ranged, ["__s", "__lo", "__hi"]).select(
             "__s",
             F.col("__lo").cast(key_type).alias("__lo"),
             F.col("__hi").cast(key_type).alias("__hi"),
@@ -1045,7 +1059,7 @@ def _merge_files_sharded(
     unstatted = [f for f in cand_files if f not in {r[0] for r in stats_rows}]
     if stats_rows:
         key_type = dict(incoming.dtypes)[prune_col]
-        stats_df = spark.createDataFrame(stats_rows, ["__f", "__lo", "__hi"]).select(
+        stats_df = local_df(spark, stats_rows, ["__f", "__lo", "__hi"]).select(
             "__f",
             F.col("__lo").cast(key_type).alias("__lo"),
             F.col("__hi").cast(key_type).alias("__hi"),
@@ -1096,10 +1110,10 @@ def _merge_files_sharded(
             ),
             renames,
         )
-        existing_touched, incoming_aligned = _align_schemas(existing_touched, incoming)
+        existing_touched, incoming_aligned = _align_schemas(existing_touched, written)
         merged = apply_upsert(existing_touched, incoming_aligned, keys=keys, order_col=order_col)
     else:
-        merged = upsert_latest(incoming, keys=keys, order_col=order_col)
+        merged = upsert_latest(written, keys=keys, order_col=order_col)
     new_files, new_fstats = _write_data_files(merged, path, parent + 1, stats_cols=(prune_col,))
     version = _commit(
         path,

@@ -33,6 +33,7 @@ reading.
 Usage:
     python scripts/scale_curves.py [--runs 3] [--out SCALE_CURVES.json]
                                    [--entries a,b,c] [--sf-dirs d1,d2,...]
+    python scripts/scale_curves.py --refit SCALE_CURVES*.json
 Writes a JSON artifact plus a ready-to-paste markdown table on stdout.
 """
 
@@ -79,6 +80,54 @@ def _sf(d: str) -> float:
     return float(os.path.basename(d.rstrip("/")).replace("sf", ""))
 
 
+def fit(runs_by_sf: dict[str, list[float]]) -> dict:
+    """The fitted fields of one entry, from its per-point run times
+    (each point's time is the min of its runs)."""
+    sfs = sorted(runs_by_sf, key=float)
+    ts = [min(runs_by_sf[s]) for s in sfs]
+    xs = [float(s) for s in sfs]
+    # per-10× exponent of each consecutive segment, normalized by
+    # the segment's actual sf ratio (decade segments divide by 1)
+    segs = [
+        round(math.log10(ts[i + 1] / ts[i]) / math.log10(xs[i + 1] / xs[i]), 2)
+        if ts[i] > 0
+        else None
+        for i in range(len(ts) - 1)
+    ]
+    # fixed-floor-adjusted exponent of the TOP segment: treat the
+    # lowest-sf reading as the entry's fixed per-run cost (job
+    # launch, store bootstrap, micro-batch startup) and fit the
+    # growth of the remaining data-dependent part. Guard: each
+    # residual must clear both 0.05 s and its point's run spread
+    # (max - min of the runs), or the fit divides by noise.
+    spread = [max(runs_by_sf[s]) - min(runs_by_sf[s]) for s in sfs]
+    r_mid, r_hi = ts[-2] - ts[0], ts[-1] - ts[0]
+    exp_hi_adj = (
+        round(math.log10(r_hi / r_mid) / math.log10(xs[-1] / xs[-2]), 2)
+        if r_mid > max(0.05, spread[-2]) and r_hi > max(0.05, spread[-1])
+        else None
+    )
+    return {
+        "exp_low_segment": segs[0],
+        "exp_high_segment": segs[-1],
+        "exp_segments": segs,
+        "exp_high_adjusted": exp_hi_adj,
+    }
+
+
+def refit(paths: list[str]) -> None:
+    """Re-derive every entry's fitted fields from the ``runs_by_sf``
+    already stored in each artifact, in place; runs no Spark."""
+    for path in paths:
+        with open(path) as f:
+            data = json.load(f)
+        for rec in data["entries"].values():
+            rec.update(fit(rec["runs_by_sf"]))
+        with open(path, "w") as f:
+            json.dump(data, f, indent=1)
+        print(f"refit {path}", file=sys.stderr)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=3)
@@ -96,7 +145,17 @@ def main() -> None:
         "otherwise cross the broadcast boundary (round 12: a regime "
         "transition mid-span reads as a fake super-linear exponent)",
     )
+    ap.add_argument(
+        "--refit",
+        nargs="+",
+        metavar="ARTIFACT",
+        help="re-derive the fitted fields of existing artifacts from their "
+        "stored runs_by_sf instead of measuring",
+    )
     args = ap.parse_args()
+    if args.refit:
+        refit(args.refit)
+        return
     entries = [n.strip() for n in args.entries.split(",") if n.strip()]
     sf_dirs = [d.strip() for d in args.sf_dirs.split(",") if d.strip()]
     sf_dirs.sort(key=_sf)
@@ -145,37 +204,7 @@ def main() -> None:
             per_sf[str(_sf(d))] = round(min(times), 3)
             runs_detail[str(_sf(d))] = [round(t, 3) for t in times]
             print(f"  {name} sf={_sf(d)}: min {min(times):.3f}s of {[round(t,2) for t in times]}", file=sys.stderr)
-        ts = [per_sf[str(s)] for s in sfs]
-        # per-10× exponent of each consecutive segment, normalized by
-        # the segment's actual sf ratio (decade segments divide by 1)
-        segs = [
-            round(math.log10(ts[i + 1] / ts[i]) / math.log10(sfs[i + 1] / sfs[i]), 2)
-            if ts[i] > 0
-            else None
-            for i in range(len(ts) - 1)
-        ]
-        # fixed-floor-adjusted exponent of the TOP segment: treat the
-        # lowest-sf reading as the entry's fixed per-run cost (job
-        # launch, store bootstrap, micro-batch startup) and fit the
-        # growth of the remaining data-dependent part. Guard: needs
-        # both residuals clearly positive or the log is meaningless.
-        t_lo = ts[0]
-        r_mid, r_hi = ts[-2] - t_lo, ts[-1] - t_lo
-        exp_hi_adj = (
-            round(
-                math.log10(r_hi / r_mid) / math.log10(sfs[-1] / sfs[-2]), 2
-            )
-            if r_mid > 0.05 and r_hi > 0.05
-            else None
-        )
-        results[name] = {
-            "sec_by_sf": per_sf,
-            "runs_by_sf": runs_detail,
-            "exp_low_segment": segs[0],
-            "exp_high_segment": segs[-1],
-            "exp_segments": segs,
-            "exp_high_adjusted": exp_hi_adj,
-        }
+        results[name] = {"sec_by_sf": per_sf, "runs_by_sf": runs_detail, **fit(runs_detail)}
 
     out_path = os.path.abspath(args.out)
     payload: dict = {"runs_per_point": args.runs, "entries": results}

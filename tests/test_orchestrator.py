@@ -166,6 +166,91 @@ def test_versioned_sync_history_rollback(spark, landed, tmp_path):
         )
 
 
+def _land_with_null_keys(spark, src: str, dest: str, n_null: int, n_keep: int | None = None) -> str:
+    """Copy the midocean feeds under ``src`` to ``dest``, keeping the
+    first ``n_keep`` products (all by default) and planting ``n_null``
+    product rows whose ``master_code`` (hence ``product_id``) is null."""
+    out = os.path.join(dest, "midocean")
+    for name in os.listdir(os.path.join(src, "midocean")):
+        df = spark.read.parquet(os.path.join(src, "midocean", name))
+        if name == "mo_products.parquet":
+            kept = df.orderBy("master_code").limit(n_keep) if n_keep is not None else df
+            nulls = df.orderBy("master_code").limit(n_null).withColumn(
+                "master_code", F.lit(None).cast("string")
+            )
+            df = kept.unionByName(nulls)
+        df.write.mode("overwrite").parquet(os.path.join(out, name))
+    return dest
+
+
+def _within(seconds: float, fn):
+    """``fn()``, failing instead of hanging if it does not return."""
+    import threading
+
+    box = {}
+    t = threading.Thread(target=lambda: box.update(out=fn()), daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"call did not return within {seconds} s"
+    return box["out"]
+
+
+def test_versioned_sync_error_count_is_observed_in_the_write(spark, landed, tmp_path):
+    """The versioned sync's ETL counters come from the MERGE write job
+    (DataFrame.observe), not a second query: planted null-key rows are
+    counted exactly on a full sync and on a delta, and the empty
+    --since delta reports zero without blocking on the Observation."""
+    gold = str(tmp_path / "vgold")
+    full = run_sync(
+        spark, _land_with_null_keys(spark, landed, str(tmp_path / "full"), n_null=2),
+        gold, supplier_id="midocean", versioned=True,
+    )
+    assert full["error_count"] == 2 and full["version"] == 1
+    assert full["per_supplier"]["midocean"] >= 12
+
+    delta = run_sync(
+        spark, _land_with_null_keys(spark, landed, str(tmp_path / "delta"), n_null=3, n_keep=4),
+        gold, supplier_id="midocean", versioned=True,
+    )
+    assert delta["error_count"] == 3 and delta["version"] == 2
+
+    empty = _within(300, lambda: run_sync(
+        spark, landed, gold, supplier_id="midocean", since="2099-01-01", versioned=True
+    ))
+    assert empty["error_count"] == 0 and empty["version"] == 3
+    assert empty["files_rewritten"] == 0
+
+
+def test_run_status_single_pass_matches_per_rollup_scans(spark, landed, tmp_path):
+    """run_status derives both roll-ups and the total from one
+    (supplier, status) aggregate; the dict equals the three separate
+    scans it replaced, null keys included."""
+    gold = str(tmp_path / "vgold")
+    run_sync(
+        spark, _land_with_null_keys(spark, landed, str(tmp_path / "f"), n_null=2),
+        gold, supplier_id="midocean", versioned=True,
+    )
+    from pim_etl_spark.pipeline import versioned as V
+
+    # a null-status row and a null-supplier row exercise the null keys
+    V.commit_append(
+        spark.createDataFrame(
+            [("x_1", None, "active"), ("x_2", "midocean", None)],
+            "product_id string, supplier_id string, status string",
+        ),
+        gold,
+    )
+    g = V.read_version(spark, gold)
+    expected = {
+        "total_products": g.count(),
+        "by_supplier": {r[0]: r[1] for r in g.groupBy("supplier_id").count().collect()},
+        "by_status": {r[0]: r[1] for r in g.groupBy("status").count().collect()},
+        "version": V.current_version(gold),
+    }
+    assert None in expected["by_supplier"] and None in expected["by_status"]
+    assert run_status(spark, gold) == expected
+
+
 def test_cli_refresh_rollup_action(spark, landed, tmp_path):
     """refresh-rollup CLI: bootstrap a per-supplier rollup from the
     versioned gold, then a repeat sync + refresh keeps it consistent."""

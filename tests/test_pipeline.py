@@ -465,3 +465,54 @@ def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
     out = spark.read.parquet(path)
     assert out.count() == 10_000
     assert out.groupBy().sum("id").collect()[0][0] == sum(range(10_000))
+
+
+def test_driver_built_tables_are_arrow_local(spark, tmp_path, monkeypatch):
+    """Every driver-built table on the versioned sync path (technique
+    decode, merge stats, shard ranges, Bloom lookup probe) has the
+    schema and rows of the ``createDataFrame(list)`` it replaces, and
+    executes as a LocalTableScan with no PythonRDD in its lineage — so
+    building it starts no Python worker."""
+    from pim_etl_spark import session
+    from pim_etl_spark.pipeline import versioned as V
+
+    built = []
+
+    def recording(spark_, rows, schema):
+        df = session.local_df(spark_, rows, schema)
+        built.append((rows, schema, df))
+        return df
+
+    monkeypatch.setattr(silver, "local_df", recording)
+    monkeypatch.setattr(V, "local_df", recording)
+
+    def table(n, files):
+        return (
+            spark.range(n)
+            .selectExpr("id AS product_id", "CAST(id AS DOUBLE) AS base_price",
+                        "CAST(1 AS LONG) AS version")
+            .repartitionByRange(files, "product_id")
+        )
+
+    batch = spark.createDataFrame(
+        [(0, 9.0, 2), (100, 1.0, 2)], "product_id bigint, base_price double, version bigint"
+    )
+    silver.technique_decode_df(spark)
+    inline = str(tmp_path / "inline")
+    V.commit_snapshot(table(40, 8), inline, stats_cols=("product_id",), bloom_col="product_id")
+    V.merge_files(spark, inline, batch, keys=["product_id"], order_col="version")
+    V.point_lookup_plan(spark, inline, "product_id", [3, 7], version=1)
+    monkeypatch.setattr(V, "MANIFEST_SHARD_SIZE", 4)
+    sharded = str(tmp_path / "sharded")
+    V.commit_snapshot(table(40, 20), sharded, stats_cols=("product_id",))
+    V.merge_files(spark, sharded, batch, keys=["product_id"], order_col="version")
+
+    # decode, inline stats, probe, shard ranges, sharded stats
+    assert len(built) == 5
+    for rows, schema, df in built:
+        ref = spark.createDataFrame(rows, schema)
+        assert df.schema == ref.schema
+        assert sorted(df.collect(), key=str) == sorted(ref.collect(), key=str)
+        qe = df._jdf.queryExecution()
+        assert "LocalTableScan" in qe.executedPlan().toString()
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
